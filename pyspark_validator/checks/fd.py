@@ -40,6 +40,162 @@ def _aliased_keys(cols: list[str], prefix: str, null_mode: NullMode) -> list[Col
     ]
 
 
+# The functions below are the FD count algebra over the (X,Y)-level count frame
+# [<x keys...>, <y keys...>, ycnt] (optionally with partition_id). FDCheck
+# builds that frame from a table; incremental.IncrementalFD keeps it as its
+# delta-maintained state. Both derive every verdict and measure through here.
+
+
+def fd_x_level(xy_counts: DataFrame, keys: list[str]) -> DataFrame:
+    """Level-2: per distinct ``keys`` (X, with or without partition_id) --
+    cluster size, distinct-Y count, max Y multiplicity, the within-cluster
+    conflicting-ordered-pair count, and the entropy partials (sum cxy ln cxy)
+    feeding FI. Callers that do not reference a column get it pruned from the
+    optimized plan."""
+    ycnt = F.col("ycnt")
+    return xy_counts.groupBy(*keys).agg(
+        F.sum(ycnt).alias("cx"),
+        F.count(F.lit(1)).alias("n_distinct_y"),
+        F.max(ycnt).alias("max_y"),
+        F.sum(ycnt * (ycnt - 1)).alias("y_pairs"),
+        F.sum(ycnt * F.log(ycnt.cast("double"))).alias("y_ln_sum"),
+    )
+
+
+def _conflict_pairs() -> Column:
+    """g1 numerator: sum over X-clusters of c(c-1) - sum_y f(f-1)."""
+    cx = F.col("cx")
+    return F.sum(cx * (cx - 1) - F.col("y_pairs")).alias("conflict_pairs")
+
+
+def _g1_error() -> Column:
+    """Partition/global g1 error = conflict_pairs / (n^2 - n); 0 when n <= 1."""
+    n = F.col("n_rows")
+    return F.when(n > 1, F.col("conflict_pairs") / (n * n - n)).otherwise(
+        F.lit(0.0)
+    )
+
+
+def fd_verdicts(x_level: DataFrame) -> DataFrame:
+    """Per-partition verdict from ``fd_x_level(..., ["partition_id", *x])``:
+    holds <=> distinct(X)==distinct(X,Y) in the partition <=> no X-cluster with
+    >1 distinct Y. Also carries the g1 numerator (conflicting ordered pairs)
+    and per-partition n for error assembly."""
+    viol = F.col("n_distinct_y") > 1
+    cx = F.col("cx")
+    return (
+        x_level.groupBy("partition_id")
+        .agg(
+            F.sum(cx).alias("n_rows"),
+            F.count(F.lit(1)).alias("n_distinct_x"),
+            F.sum("n_distinct_y").alias("n_distinct_xy"),
+            F.sum(viol.cast("long")).alias("n_error_clusters"),
+            F.sum(F.when(viol, cx).otherwise(0)).alias("n_error_rows"),
+            _conflict_pairs(),
+        )
+        .withColumn("g1_error", _g1_error())
+        .withColumn("holds", F.col("n_error_clusters") == 0)
+    )
+
+
+_FD_TOTALS = (
+    "n_rows",
+    "n_distinct_x",
+    "n_distinct_xy",
+    "n_error_clusters",
+    "n_error_rows",
+    "conflict_pairs",
+)
+
+
+def fd_summary(verdicts: DataFrame) -> DataFrame:
+    """Global single-row verdict from ``fd_verdicts`` output, matching the
+    reference getters (bind_fd_verification.cpp:28-32): holds / error /
+    num_error_clusters / num_error_rows."""
+    return verdicts.agg(
+        (F.sum("n_error_clusters") == 0).alias("holds"),
+        *[F.sum(c).alias(c) for c in _FD_TOTALS],
+    ).withColumn("g1_error", _g1_error())
+
+
+def afd_from_counts(
+    xy_counts: DataFrame, x_level: DataFrame, y_keys: list[str]
+) -> DataFrame:
+    """g1, g2, pdep, tau, mu+, rho, FI for X->Y (afd_measures.cpp:6-130), one row.
+
+    Closed forms over the (X,Y)-level count vector (``x_level`` is its
+    ``fd_x_level``) plus one extra pass over Y:
+      pdep(X->Y) = (1/n) sum_xy cxy^2/cx          pdep(Y) = sum_y cy^2 / n^2
+      tau  = (pdep_xy - pdep_y)/(1 - pdep_y)       (1 if pdep_y == 1)
+      mu+  = max(0, 1-(1-pdep_xy)/(1-pdep_y)*(n-1)/(n-K)), K = #distinct X
+      rho  = K / #distinct(X,Y)
+      g1   = (sum_x cx(cx-1) - sum_xy cxy(cxy-1)) / (n^2 - n)
+    """
+    x = x_level.agg(
+        F.sum("cx").alias("n"),
+        F.count(F.lit(1)).alias("k_x"),
+        F.sum("n_distinct_y").alias("k_xy"),
+        _conflict_pairs(),
+        # g2 numerator (afd_metric_calculator.cpp:71-87): rows inside
+        # X-clusters whose Y is not constant
+        F.sum(
+            F.when(F.col("n_distinct_y") > 1, F.col("cx")).otherwise(0)
+        ).alias("g2_rows"),
+        # entropy partials for FI (afd_metric_calculator.cpp:180-211):
+        # H(Y|X) = -(1/n)[sum_xy cxy ln cxy - sum_x cx ln cx]
+        F.sum("y_ln_sum").alias("sum_cxy_ln"),
+        F.sum(F.col("cx") * F.log(F.col("cx").cast("double"))).alias("sum_cx_ln"),
+        # pdep numerator: sum_xy cxy^2/cx = sum_x (y_pairs + cx)/cx since
+        # sum_y cxy^2 = sum cxy(cxy-1) + sum cxy -- algebraic, so it folds
+        # into THIS agg instead of a second scan of the X-level lineage.
+        F.sum((F.col("y_pairs") + F.col("cx")) / F.col("cx")).alias("pdep_num"),
+    )
+    # Y marginal from the (X,Y)-level counts (cy = sum_x cxy): reuses the
+    # count frame instead of re-scanning the raw table.
+    y_level = (
+        xy_counts.groupBy(*y_keys)
+        .agg(F.sum("ycnt").alias("cy"))
+        .agg(
+            F.sum(F.col("cy") * F.col("cy")).alias("sum_cy2"),
+            F.sum(F.col("cy") * F.log(F.col("cy").cast("double"))).alias(
+                "sum_cy_ln"
+            ),
+            F.count(F.lit(1)).alias("k_y"),
+        )
+    )
+    j = x.crossJoin(y_level)
+    n = F.col("n").cast("double")
+    pdep_xy = F.col("pdep_num") / n
+    pdep_y = F.col("sum_cy2") / (n * n)
+    k_x = F.col("k_x").cast("double")
+    tau = F.when(pdep_y == 1.0, F.lit(1.0)).otherwise(
+        (pdep_xy - pdep_y) / (F.lit(1.0) - pdep_y)
+    )
+    mu = F.lit(1.0) - (F.lit(1.0) - pdep_xy) / (F.lit(1.0) - pdep_y) * (n - 1) / (
+        n - k_x
+    )
+    mu_plus = F.when((pdep_y == 1.0) | (k_x == n), F.lit(1.0)).otherwise(
+        F.greatest(F.lit(0.0), mu)
+    )
+    # FI = mutual information / H(Y); 0 when Y has < 2 distinct values
+    # (afd_metric_calculator.cpp:180-211). All terms use natural logs.
+    h_y = F.log(n) - F.col("sum_cy_ln") / n
+    h_y_given_x = -(F.col("sum_cxy_ln") - F.col("sum_cx_ln")) / n
+    fi = F.when(F.col("k_y") < 2, F.lit(0.0)).otherwise((h_y - h_y_given_x) / h_y)
+    return j.select(
+        (F.col("conflict_pairs") / (n * n - n)).alias("g1"),
+        (F.col("g2_rows") / n).alias("g2"),
+        pdep_xy.alias("pdep"),
+        tau.alias("tau"),
+        mu_plus.alias("mu_plus"),
+        (k_x / F.col("k_xy")).alias("rho"),
+        fi.alias("fi"),
+        F.col("n").alias("n_rows"),
+        F.col("k_x").alias("n_distinct_x"),
+        F.col("k_xy").alias("n_distinct_xy"),
+    )
+
+
 @dataclass
 class FDCheck:
     """Lazy FD / AFD / PFD check of lhs -> rhs over df."""
@@ -84,71 +240,18 @@ class FDCheck:
 
     @cached_property
     def _x_level(self) -> DataFrame:
-        """Level-2: per distinct X -- cluster size, distinct-Y count, max Y
-        multiplicity, the within-cluster conflicting-ordered-pair count, and
-        the entropy partials (sum cxy ln cxy) feeding FI."""
-        ycnt = F.col("ycnt")
-        return self._xy_counts.groupBy(
-            "partition_id", *[f"__x{i}" for i in range(len(self.lhs))]
-        ).agg(
-            F.sum(ycnt).alias("cx"),
-            F.count(F.lit(1)).alias("n_distinct_y"),
-            F.max(ycnt).alias("max_y"),
-            F.sum(ycnt * (ycnt - 1)).alias("y_pairs"),
-            F.sum(ycnt * F.log(ycnt.cast("double"))).alias("y_ln_sum"),
+        return fd_x_level(
+            self._xy_counts,
+            ["partition_id", *[f"__x{i}" for i in range(len(self.lhs))]],
         )
 
     def verdicts(self) -> DataFrame:
-        """Per-partition verdict: holds <=> distinct(X)==distinct(X,Y) in the
-        partition <=> no X-cluster with >1 distinct Y. Also carries the g1 numerator
-        (conflicting ordered pairs) and per-partition n for error assembly."""
-        viol = F.col("n_distinct_y") > 1
-        cx = F.col("cx")
-        return (
-            self._x_level.groupBy("partition_id")
-            .agg(
-                F.sum(cx).alias("n_rows"),
-                F.count(F.lit(1)).alias("n_distinct_x"),
-                F.sum("n_distinct_y").alias("n_distinct_xy"),
-                F.sum(viol.cast("long")).alias("n_error_clusters"),
-                F.sum(F.when(viol, cx).otherwise(0)).alias("n_error_rows"),
-                F.sum(cx * (cx - 1) - F.col("y_pairs")).alias("conflict_pairs"),
-            )
-            .withColumn(
-                "g1_error",
-                F.when(
-                    F.col("n_rows") > 1,
-                    F.col("conflict_pairs")
-                    / (F.col("n_rows") * F.col("n_rows") - F.col("n_rows")),
-                ).otherwise(F.lit(0.0)),
-            )
-            .withColumn("holds", F.col("n_error_clusters") == 0)
-        )
+        """Per-partition verdict (see ``fd_verdicts``)."""
+        return fd_verdicts(self._x_level)
 
     def summary(self) -> DataFrame:
-        """Global single-row verdict matching the reference getters
-        (bind_fd_verification.cpp:28-32): holds / error / num_error_clusters /
-        num_error_rows."""
-        return (
-            self.verdicts()
-            .agg(
-                (F.sum("n_error_clusters") == 0).alias("holds"),
-                F.sum("n_rows").alias("n_rows"),
-                F.sum("n_distinct_x").alias("n_distinct_x"),
-                F.sum("n_distinct_xy").alias("n_distinct_xy"),
-                F.sum("n_error_clusters").alias("n_error_clusters"),
-                F.sum("n_error_rows").alias("n_error_rows"),
-                F.sum("conflict_pairs").alias("conflict_pairs"),
-            )
-            .withColumn(
-                "g1_error",
-                F.when(
-                    F.col("n_rows") > 1,
-                    F.col("conflict_pairs")
-                    / (F.col("n_rows") * F.col("n_rows") - F.col("n_rows")),
-                ).otherwise(F.lit(0.0)),
-            )
-        )
+        """Global single-row verdict (see ``fd_summary``)."""
+        return fd_summary(self.verdicts())
 
     def _lhs_sort_keys(self, prefix: str = "") -> list[Column]:
         """The reference's typed LHS comparator (stats_calculator.cpp:12-43):
@@ -225,83 +328,12 @@ class FDCheck:
 
     # ----- AFD measure family ------------------------------------------------
     def afd_measures(self) -> DataFrame:
-        """g1, pdep, tau, mu+, rho for X->Y (afd_measures.cpp:6-130), one row.
-
-        Closed forms over the (X,Y)-level count vector plus one extra pass over Y:
-          pdep(X->Y) = (1/n) sum_xy cxy^2/cx          pdep(Y) = sum_y cy^2 / n^2
-          tau  = (pdep_xy - pdep_y)/(1 - pdep_y)       (1 if pdep_y == 1)
-          mu+  = max(0, 1-(1-pdep_xy)/(1-pdep_y)*(n-1)/(n-K)), K = #distinct X
-          rho  = K / #distinct(X,Y)
-          g1   = (sum_x cx(cx-1) - sum_xy cxy(cxy-1)) / (n^2 - n)
-        """
-        x = self._x_level.agg(
-            F.sum("cx").alias("n"),
-            F.count(F.lit(1)).alias("k_x"),
-            F.sum("n_distinct_y").alias("k_xy"),
-            F.sum(F.col("cx") * (F.col("cx") - 1) - F.col("y_pairs")).alias(
-                "conflict_pairs"
-            ),
-            # g2 numerator (afd_metric_calculator.cpp:71-87): rows inside
-            # X-clusters whose Y is not constant
-            F.sum(
-                F.when(F.col("n_distinct_y") > 1, F.col("cx")).otherwise(0)
-            ).alias("g2_rows"),
-            # entropy partials for FI (afd_metric_calculator.cpp:180-211):
-            # H(Y|X) = -(1/n)[sum_xy cxy ln cxy - sum_x cx ln cx]
-            F.sum("y_ln_sum").alias("sum_cxy_ln"),
-            F.sum(F.col("cx") * F.log(F.col("cx").cast("double"))).alias(
-                "sum_cx_ln"
-            ),
-            # pdep numerator: sum_xy cxy^2/cx = sum_x (y_pairs + cx)/cx since
-            # sum_y cxy^2 = sum cxy(cxy-1) + sum cxy -- algebraic, so it folds
-            # into THIS agg instead of a second scan of the X-level lineage.
-            F.sum((F.col("y_pairs") + F.col("cx")) / F.col("cx")).alias("pdep_num"),
-        )
-        # Y marginal from the (X,Y)-level counts (cy = sum_x cxy): reuses the
-        # already-shuffled xy lineage instead of re-scanning the raw table.
-        y_level = (
-            self._xy_counts.groupBy(*[f"__y{i}" for i in range(len(self.rhs))])
-            .agg(F.sum("ycnt").alias("cy"))
-            .agg(
-                F.sum(F.col("cy") * F.col("cy")).alias("sum_cy2"),
-                F.sum(F.col("cy") * F.log(F.col("cy").cast("double"))).alias(
-                    "sum_cy_ln"
-                ),
-                F.count(F.lit(1)).alias("k_y"),
-            )
-        )
-        j = x.crossJoin(y_level)
-        n = F.col("n").cast("double")
-        pdep_xy = F.col("pdep_num") / n
-        pdep_y = F.col("sum_cy2") / (n * n)
-        k_x = F.col("k_x").cast("double")
-        tau = F.when(pdep_y == 1.0, F.lit(1.0)).otherwise(
-            (pdep_xy - pdep_y) / (F.lit(1.0) - pdep_y)
-        )
-        mu = F.lit(1.0) - (F.lit(1.0) - pdep_xy) / (F.lit(1.0) - pdep_y) * (n - 1) / (
-            n - k_x
-        )
-        mu_plus = F.when((pdep_y == 1.0) | (k_x == n), F.lit(1.0)).otherwise(
-            F.greatest(F.lit(0.0), mu)
-        )
-        # FI = mutual information / H(Y); 0 when Y has < 2 distinct values
-        # (afd_metric_calculator.cpp:180-211). All terms use natural logs.
-        h_y = F.log(n) - F.col("sum_cy_ln") / n
-        h_y_given_x = -(F.col("sum_cxy_ln") - F.col("sum_cx_ln")) / n
-        fi = F.when(F.col("k_y") < 2, F.lit(0.0)).otherwise(
-            (h_y - h_y_given_x) / h_y
-        )
-        return j.select(
-            (F.col("conflict_pairs") / (n * n - n)).alias("g1"),
-            (F.col("g2_rows") / n).alias("g2"),
-            pdep_xy.alias("pdep"),
-            tau.alias("tau"),
-            mu_plus.alias("mu_plus"),
-            (k_x / F.col("k_xy")).alias("rho"),
-            fi.alias("fi"),
-            F.col("n").alias("n_rows"),
-            F.col("k_x").alias("n_distinct_x"),
-            F.col("k_xy").alias("n_distinct_xy"),
+        """g1, g2, pdep, tau, mu+, rho, FI for X->Y, one row (see
+        ``afd_from_counts``)."""
+        return afd_from_counts(
+            self._xy_counts,
+            self._x_level,
+            [f"__y{i}" for i in range(len(self.rhs))],
         )
 
     def pfd_measures(self) -> DataFrame:

@@ -38,6 +38,60 @@ def _key_cols(
     ]
 
 
+def _aucc_error() -> Column:
+    """AUCC error = violating_pairs / (n * (n-1)); 0 when n <= 1."""
+    n = F.col("n_rows")
+    return F.when(n > 1, F.col("violating_pairs") / (n * (n - F.lit(1)))).otherwise(
+        F.lit(0.0)
+    )
+
+
+def ucc_verdicts(counts: DataFrame) -> DataFrame:
+    """Per-partition UCC verdicts from a (partition_id, key..., cnt) count frame:
+    [partition_id, n_rows, n_distinct, n_violating_clusters, n_violating_rows,
+    violating_pairs, aucc_error, holds].
+
+    The batch check and the incremental engine (which keeps this frame as its
+    state) both roll up through here. ``violating_pairs`` = sum c*(c-1)
+    (ordered pairs, reference numerator); ``aucc_error`` uses the
+    partition-local n. Algebraic aggs only => map-side partial aggregation =>
+    skew-immune.
+    """
+    cnt = F.col("cnt")
+    viol = cnt > 1
+    return (
+        counts.groupBy("partition_id")
+        .agg(
+            F.sum(cnt).alias("n_rows"),
+            F.count(F.lit(1)).alias("n_distinct"),
+            F.sum(viol.cast("long")).alias("n_violating_clusters"),
+            F.sum(F.when(viol, cnt).otherwise(0)).alias("n_violating_rows"),
+            F.sum(cnt * (cnt - 1)).alias("violating_pairs"),
+        )
+        .withColumn("aucc_error", _aucc_error())
+        .withColumn("holds", F.col("n_violating_clusters") == 0)
+    )
+
+
+_UCC_TOTALS = (
+    "n_rows",
+    "n_distinct",
+    "n_violating_clusters",
+    "n_violating_rows",
+    "violating_pairs",
+)
+
+
+def ucc_summary(verdicts: DataFrame) -> DataFrame:
+    """Single-row global verdict from ``ucc_verdicts`` output, same fields as
+    the reference's getters: ucc_holds / num_violating_clusters /
+    num_violating_rows / aucc_error (ucc_stats_calculator.h:47-73)."""
+    return verdicts.agg(
+        (F.sum(F.col("n_violating_clusters")) == 0).alias("holds"),
+        *[F.sum(c).alias(c) for c in _UCC_TOTALS],
+    ).withColumn("aucc_error", _aucc_error())
+
+
 @dataclass
 class UCCCheck:
     """Lazy UCC check over ``df`` on ``columns``.
@@ -88,56 +142,14 @@ class UCCCheck:
         )
 
     def verdicts(self) -> DataFrame:
-        """Per-partition verdict: [partition_id, n_rows, n_distinct,
-        n_violating_clusters, n_violating_rows, violating_pairs, aucc_error, holds].
-
-        ``violating_pairs`` = sum c*(c-1) (ordered pairs, reference numerator);
-        ``aucc_error`` uses the partition-local n. Algebraic aggs only =>
-        map-side partial aggregation => skew-immune.
-        """
-        cnt = F.col("cnt")
-        viol = cnt > 1
-        out = (
-            self.cluster_counts.groupBy("partition_id")
-            .agg(
-                F.sum(cnt).alias("n_rows"),
-                F.count(F.lit(1)).alias("n_distinct"),
-                F.sum(viol.cast("long")).alias("n_violating_clusters"),
-                F.sum(F.when(viol, cnt).otherwise(0)).alias("n_violating_rows"),
-                F.sum(cnt * (cnt - 1)).alias("violating_pairs"),
-            )
-            .withColumn(
-                "aucc_error",
-                F.when(
-                    F.col("n_rows") > 1,
-                    F.col("violating_pairs")
-                    / (F.col("n_rows") * (F.col("n_rows") - F.lit(1))),
-                ).otherwise(F.lit(0.0)),
-            )
-            .withColumn("holds", F.col("n_violating_clusters") == 0)
-        )
-        return out
+        """Per-partition verdict rolled up from ``cluster_counts`` (see
+        ``ucc_verdicts``)."""
+        return ucc_verdicts(self.cluster_counts)
 
     def summary(self) -> DataFrame:
-        """Global verdict (single row), same fields as the reference's getters:
-        ucc_holds / num_violating_clusters / num_violating_rows / aucc_error
-        (ucc_stats_calculator.h:47-73)."""
-        v = self.verdicts()
-        return v.agg(
-            (F.sum(F.col("n_violating_clusters")) == 0).alias("holds"),
-            F.sum("n_rows").alias("n_rows"),
-            F.sum("n_distinct").alias("n_distinct"),
-            F.sum("n_violating_clusters").alias("n_violating_clusters"),
-            F.sum("n_violating_rows").alias("n_violating_rows"),
-            F.sum("violating_pairs").alias("violating_pairs"),
-        ).withColumn(
-            "aucc_error",
-            F.when(
-                F.col("n_rows") > 1,
-                F.col("violating_pairs")
-                / (F.col("n_rows") * (F.col("n_rows") - F.lit(1))),
-            ).otherwise(F.lit(0.0)),
-        )
+        """Global verdict (single row), same fields as the reference's getters
+        (see ``ucc_summary``)."""
+        return ucc_summary(self.verdicts())
 
     def violations(self) -> DataFrame:
         """Violating clusters with a capped, deterministic row sample.

@@ -1697,53 +1697,42 @@ class DynamicFdVerifier(_Verifier):
             ins = new_df if ins is None else ins.unionByName(new_df)
         if ins is not None or dels is not None:
             self._inc.apply_delta(inserts=ins, deletes=dels)
-        from pyspark.sql import functions as F
+        from pyspark_validator.checks.fd import fd_summary
 
-        self._rollup = (
-            self._inc.verdicts()
-            .agg(
-                F.sum("n_rows").alias("n"),
-                F.sum("n_error_clusters").alias("clusters"),
-                F.sum("n_error_rows").alias("rows"),
-                F.sum("conflict_pairs").alias("cp"),
-            )
-            .collect()[0]
-        )
+        self._summary = fd_summary(self._inc.verdicts()).collect()[0]
 
     def fd_holds(self) -> bool:
-        return int(self._rollup.clusters) == 0
+        return int(self._summary.n_error_clusters) == 0
 
     def get_error(self) -> float:
-        n = int(self._rollup.n)
-        return (int(self._rollup.cp) / (n * (n - 1))) if n > 1 else 0.0
+        return float(self._summary.g1_error)
 
     def get_num_error_clusters(self) -> int:
-        return int(self._rollup.clusters)
+        return int(self._summary.n_error_clusters)
 
     def get_num_error_rows(self) -> int:
-        return int(self._rollup.rows)
+        return int(self._summary.n_error_rows)
 
     def get_highlights(self, cap: int = 100) -> list[dict]:
         """Violating X clusters from state: lhs values + cluster_size +
         num_distinct_rhs_values, largest first, capped."""
         from pyspark.sql import functions as F
 
-        s = self._inc.state.read()
-        x_level = s.groupBy(*self._inc.lhs).agg(
-            F.sum("ycnt").alias("cluster_size"),
-            F.count(F.lit(1)).alias("num_distinct_rhs_values"),
-        )
+        from pyspark_validator.checks.fd import fd_x_level
+
+        lhs = self._inc.lhs
         rows = (
-            x_level.filter(F.col("num_distinct_rhs_values") > 1)
-            .orderBy(F.desc("cluster_size"), *[F.asc_nulls_first(c) for c in self._inc.lhs])
+            fd_x_level(self._inc.state.read(), lhs)
+            .filter(F.col("n_distinct_y") > 1)
+            .orderBy(F.desc("cx"), *[F.asc_nulls_first(c) for c in lhs])
             .limit(cap)
             .collect()
         )
         return [
             {
-                "lhs_values": [r[c] for c in self._inc.lhs],
-                "cluster_size": int(r["cluster_size"]),
-                "num_distinct_rhs_values": int(r["num_distinct_rhs_values"]),
+                "lhs_values": [r[c] for c in lhs],
+                "cluster_size": int(r["cx"]),
+                "num_distinct_rhs_values": int(r["n_distinct_y"]),
             }
             for r in rows
         ]

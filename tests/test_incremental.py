@@ -90,7 +90,6 @@ def test_incremental_fd_matches_full_recompute(spark, tmp_path):
     dele = spark.createDataFrame([(5, "y5")], ["x", "y"])
     inc.apply_delta(inserts=ins, deletes=dele)
 
-    post = base.filter(~((F.col("x") == 5) & F.monotonically_increasing_id().isin([])))
     # build post table explicitly: remove ONE (5, y5) row
     rows = [(i % 10, f"y{i % 10}") for i in range(100)]
     rows.remove((5, "y5"))
@@ -236,3 +235,138 @@ def test_state_vacuum_reference_based(spark, tmp_path):
 
     empty = _IncrementalState(spark, str(tmp_path / "none"))
     assert empty.vacuum() == {"manifests_deleted": 0, "dirs_deleted": 0}
+
+
+def test_incremental_ucc_multi_column_key(spark, tmp_path):
+    """A two-column key: the incremental partition id (hash of the key struct)
+    and every verdict field equal the batch check's on the post-delta table."""
+    schema = "a int, b string"
+    rows = [(i % 9, f"b{i % 4}") for i in range(60)] + [(None, "b0"), (3, None)]
+    base = spark.createDataFrame(rows, schema)
+    inc = IncrementalUCC(spark, str(tmp_path / "uab"), ["a", "b"], num_partitions=8)
+    inc.initialize(base)
+    ins = [(1, "b1"), (50, "b9"), (7, "zz")]
+    dels = [(0, "b0"), (8, "b0")]
+    inc.apply_delta(
+        inserts=spark.createDataFrame(ins, schema),
+        deletes=spark.createDataFrame(dels, schema),
+    )
+    post_rows = rows + ins
+    for r in dels:
+        post_rows.remove(r)
+    full = ucc_check(
+        spark.createDataFrame(post_rows, schema), ["a", "b"], num_partitions=8
+    ).verdicts()
+    cols = VERDICT_COLS + ["aucc_error"]
+    assert _sorted_rows(inc.verdicts(), cols) == _sorted_rows(full, cols)
+    assert not all(r.holds for r in inc.verdicts().collect())
+
+
+def test_incremental_fd_overlapping_lhs_rhs(spark, tmp_path):
+    """{a, b} -> {b, c}: the state keys on the unique column union; verdicts
+    and AFD measures still equal the batch check on the post-delta table."""
+    schema = "a int, b int, c string"
+    rows = [(i % 6, i % 4, f"c{i % 5}") for i in range(80)]
+    base = spark.createDataFrame(rows, schema)
+    inc = IncrementalFD(
+        spark, str(tmp_path / "fdov"), ["a", "b"], ["b", "c"], num_partitions=8
+    )
+    inc.initialize(base)
+    ins = [(0, 0, "new"), (9, 9, "c1"), (1, 1, "c1")]
+    dels = [(2, 2, "c2"), (5, 1, "c0")]
+    inc.apply_delta(
+        inserts=spark.createDataFrame(ins, schema),
+        deletes=spark.createDataFrame(dels, schema),
+    )
+    post_rows = rows + ins
+    for r in dels:
+        post_rows.remove(r)
+    static = fd_check(
+        spark.createDataFrame(post_rows, schema), ["a", "b"], ["b", "c"],
+        num_partitions=8,
+    )
+    cols = FD_VERDICT_COLS + ["g1_error"]
+    assert _sorted_rows(inc.verdicts(), cols) == _sorted_rows(static.verdicts(), cols)
+    got = inc.afd_measures().collect()[0]
+    exp = static.afd_measures().collect()[0]
+    for f in ["g1", "g2", "pdep", "tau", "mu_plus", "rho", "fi"]:
+        assert float(got[f]) == pytest.approx(float(exp[f])), f
+    assert (got.n_rows, got.n_distinct_x, got.n_distinct_xy) == (
+        exp.n_rows,
+        exp.n_distinct_x,
+        exp.n_distinct_xy,
+    )
+
+
+def test_vacuum_keeps_committed_version_after_crashed_delta(
+    spark, tmp_path, monkeypatch
+):
+    """A delta killed before _meta.json commits it leaves a newer manifest on
+    disk. vacuum retains by committed version and deletes that manifest as an
+    orphan; the committed state stays readable."""
+    import os
+
+    from pyspark_validator.incremental import _IncrementalState
+
+    base = spark.createDataFrame([(i,) for i in range(20)], ["k"])
+    eng = IncrementalUCC(spark, str(tmp_path / "crash"), ["k"], num_partitions=4)
+    eng.initialize(base)
+    eng.apply_delta(inserts=spark.createDataFrame([(100,)], ["k"]))
+    st = eng.state
+
+    def killed(self, version, schema_json):
+        raise RuntimeError("killed before commit")
+
+    monkeypatch.setattr(_IncrementalState, "_save_meta", killed)
+    with pytest.raises(RuntimeError, match="killed"):
+        # touches every partition, so v2 supersedes all of v1's directories
+        eng.apply_delta(
+            inserts=spark.createDataFrame([(i,) for i in range(200, 240)], ["k"])
+        )
+    monkeypatch.undo()
+    assert st.current_version() == 1
+    assert os.path.exists(st._manifest_path(2))
+
+    st.vacuum(keep_last=1)
+    assert os.path.exists(st._manifest_path(1))
+    assert not os.path.exists(st._manifest_path(2))
+    for rel in st.manifest().values():
+        assert os.path.isdir(os.path.join(st.path, rel))
+    post = base.unionByName(spark.createDataFrame([(100,)], ["k"]))
+    full = ucc_check(post, ["k"], num_partitions=4).verdicts()
+    assert _sorted_rows(eng.verdicts(), VERDICT_COLS) == _sorted_rows(
+        full, VERDICT_COLS
+    )
+
+
+def test_state_survives_a_meta_write_killed_midway(spark, tmp_path, monkeypatch):
+    """A failure while _meta.json is being written must leave the previous
+    version readable (no truncated file), and the delta can be retried."""
+    import json
+
+    base = spark.createDataFrame([(i,) for i in range(20)], ["k"])
+    eng = IncrementalUCC(spark, str(tmp_path / "meta"), ["k"], num_partitions=4)
+    eng.initialize(base)
+    before = _sorted_rows(eng.verdicts(), VERDICT_COLS)
+    real_dump = json.dump
+
+    def dump_dies_on_meta(obj, f, *args, **kwargs):
+        if isinstance(obj, dict) and "version" in obj:  # the _meta.json commit
+            f.write('{"version": ')
+            raise RuntimeError("killed mid-write")
+        return real_dump(obj, f, *args, **kwargs)
+
+    monkeypatch.setattr(json, "dump", dump_dies_on_meta)
+    dup = spark.createDataFrame([(3,)], ["k"])
+    with pytest.raises(RuntimeError, match="mid-write"):
+        eng.apply_delta(inserts=dup)
+    monkeypatch.undo()
+    assert eng.state.current_version() == 0
+    assert _sorted_rows(eng.verdicts(), VERDICT_COLS) == before
+
+    eng.apply_delta(inserts=dup)  # the retry commits version 1
+    assert eng.state.current_version() == 1
+    full = ucc_check(base.unionByName(dup), ["k"], num_partitions=4).verdicts()
+    assert _sorted_rows(eng.verdicts(), VERDICT_COLS) == _sorted_rows(
+        full, VERDICT_COLS
+    )

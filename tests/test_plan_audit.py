@@ -889,3 +889,26 @@ def test_gdd_relation_targets_single_groupby(spark, tables):
     p = _plan(gdd_violations(vertices, edges, gdd))
     assert "CartesianProduct" not in p
     assert "BatchEvalPython" not in p and "ArrowEvalPython" not in p
+
+
+def test_incremental_fd_verdicts_prune_entropy_partials(spark, tmp_path):
+    """The FD X-level shared by the batch check and the incremental engine
+    always defines the FI entropy partials (sum cxy ln cxy); verdicts never
+    reference them, so the optimizer must prune them: no logarithm reaches
+    the optimized plan of IncrementalFD.verdicts()."""
+    from pyspark_validator.incremental import IncrementalFD
+
+    inc = IncrementalFD(spark, str(tmp_path / "fd"), ["x"], ["y"], num_partitions=4)
+    inc.initialize(
+        spark.createDataFrame([(i % 5, i % 3) for i in range(30)], ["x", "y"])
+    )
+
+    def optimized(df) -> str:
+        return df._jdf.queryExecution().optimizedPlan().toString()
+
+    def has_log(plan: str) -> bool:
+        return re.search(r"\b(ln|log)\(", plan) is not None
+
+    assert not has_log(optimized(inc.verdicts()))
+    # control: the AFD measures do use the partials, so the probe can see them
+    assert has_log(optimized(inc.afd_measures()))
